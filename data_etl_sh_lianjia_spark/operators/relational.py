@@ -208,8 +208,10 @@ def q1_scan_agg_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q1_rawscan — compute-bound scan over the RAW landed lineitem (SURVEY.md §2.2)
 # ---------------------------------------------------------------------------
 
-# Per-row digest: 4 rounds of md5 over ~1 KB repeated blocks. Round count
-# and block size chosen by measurement (guide §1): a long chain of md5
+# Per-row digest: one seed md5 over the ~0.8 KB repeated key block, then
+# _RAWSCAN_ROUNDS (5) chained md5 rounds, each over its predecessor's hex
+# repeated to a 2 KB block (see _md5_chain). Round count and block size
+# chosen by measurement (guide §1): a long chain of md5
 # over 32-byte strings is ALLOCATION-bound in the JVM (new digest + hex
 # string per call) and runs into the shared GC/memory-bandwidth wall — a
 # 32-vs-8-core sweep of a 48-round short chain measured only ~1.4-2.2×;

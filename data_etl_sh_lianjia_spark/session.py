@@ -17,6 +17,7 @@ from __future__ import annotations
 import functools
 import os
 import threading
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,10 +108,12 @@ def get_spark(
         # always want either the co-located join or the pruned lookup.
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse")
-        # The driver testdata stores events.ts as parquet TIMESTAMP(NANOS),
-        # which the vectorized reader rejects; reading nanos as BIGINT up
-        # front avoids read_events' probe-read (a failed Spark job's worth
-        # of noise per session). read_events derives the TIMESTAMP_NTZ col.
+        # The driver testdata stores events.ts as parquet TIMESTAMP(MICROS),
+        # which every reader handles natively. A landing that stores it as
+        # TIMESTAMP(NANOS) is rejected by the vectorized reader; reading
+        # nanos as BIGINT up front avoids read_events' probe-read (a failed
+        # Spark job's worth of noise per session) on such landings.
+        # read_events derives ts_ns / the TIMESTAMP_NTZ col from either.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Keep large numpy buffers on the (reused) Python workers' glibc
         # heap instead of per-call mmap/munmap: repeated multi-MB transient
@@ -969,8 +972,6 @@ def restore_table_version(
     update_where). Source-landed appends re-apply on the next ingest —
     the landing directory still contains their files; roll an append back
     by removing its landed file (the whole-batch delete path)."""
-    import shutil
-
     _out_dir, dst = _mutation_target(spark, sf_dir, name)
     sdir = os.path.join(dst + ".snaps", f"{version:05d}")
     if not os.path.isdir(sdir):
@@ -990,11 +991,8 @@ def restore_table_version(
     # as an in-flight commit and wedge the next DML's CAS. Lineage reset
     # clears the log (same contract as full rebuilds).
     _drop_commit_log(dst)
-    # invalidate memoized views, then re-sync projections to the restored
-    # generation (they fail the lockstep check and rebuild)
-    spark._lianjia_table_cache = {}
-    spark._lianjia_views_dir = None
-    spark._lianjia_keydict_views = {}
+    # re-sync projections to the restored generation (they fail the
+    # lockstep check and rebuild; the re-ingest also drops memoized views)
     _mutation_target(spark, sf_dir, name)
 
 
@@ -1896,8 +1894,8 @@ def compact_table(
     projection stays EXACT: instead of rebuilding, their markers RESTAMP
     onto the new fingerprint chain segment (``~cmp<h>``) — O(1) per
     artifact, the payoff for making every projection row-order-independent.
-    An artifact out of lockstep refuses the restamp and rebuilds through
-    the ordinary re-ingest. The pre-compaction generation snapshots first
+    An artifact out of lockstep refuses the restamp and rebuilds (see
+    _maintain_siblings). The pre-compaction generation snapshots first
     (time travel / undo), and the ``batches`` tag map clears: compaction
     rewrites the tagged part files, so a later whole-batch source delete
     honestly falls back to a full rebuild (the documented contract).
@@ -2104,64 +2102,11 @@ def compact_table(
 
     _publish_dir(dst, new_fp, meta, _write)
 
-    # Restamp every value-unchanged sibling onto the new chain segment.
-    for artifact in (
-        f"{name}.keydict.parquet",
-        f"{name}.colstats.parquet",
-        f"{name}.aggproj.parquet",
-    ):
-        _restamp_marker(os.path.join(out_dir, artifact), old_fp, new_fp)
-    ap_spec = _AGG_PROJECTIONS.get(name)
-    if ap_spec and "coarse" in ap_spec:
-        _restamp_marker(_coarse_dst(out_dir, name, ap_spec), old_fp, new_fp)
-    tp_spec = _TOPK_PROJECTIONS.get(name)
-    if tp_spec:
-        _restamp_marker(
-            os.path.join(
-                out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
-            ),
-            old_fp, new_fp,
-        )
-    bk_col = _BUCKET_LAYOUT.get(name)
-    if bk_col:
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        _fp, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-        nb = bk_meta.get("n_buckets")
-        if nb:
-            _restamp_marker(bk_dst, f"{old_fp}:bk{nb}", f"{new_fp}:bk{nb}")
-    for jp_name, spec in _JOIN_PROJECTIONS.items():
-        if name not in spec["sources"]:
-            continue
-        # the coarse sibling is a pure function of the (value-unchanged)
-        # fine rollup: both restamp onto the new chain segment together
-        targets = [os.path.join(out_dir, f"{jp_name}.joinproj.parquet")]
-        if "coarse" in spec:
-            targets.append(_coarse_jp_dst(out_dir, jp_name, spec))
-        for jp_dst in targets:
-            jp_marker = os.path.join(jp_dst, "_SUCCESS")
-            fp, jmeta = _read_marker(jp_marker)
-            comp = (jmeta or {}).get("components") or {}
-            if comp.get(name) == old_fp:
-                comp = {**comp, name: new_fp}
-                jp_fp = (
-                    ";".join(f"{t}={comp[t]}" for t in sorted(comp)) + ":jp2"
-                )
-                tmpm = jp_marker + f".tmp-{os.getpid()}"
-                _write_marker(tmpm, jp_fp, {**jmeta, "components": comp})
-                os.replace(tmpm, jp_marker)
-    for _vp_name, vp_spec in _RESULT_PROJECTIONS.items():
-        if vp_spec["table"] != name:
-            continue
-        ver = vp_spec.get("version", "vp2")
-        _restamp_marker(
-            os.path.join(out_dir, vp_spec["artifact"]),
-            f"{old_fp}:{ver}", f"{new_fp}:{ver}",
-            components={name: new_fp},
-        )
-    # invalidate memoized DataFrames/views over the pre-compact generation
-    spark._lianjia_table_cache = {}
-    spark._lianjia_views_dir = None
-    spark._lianjia_keydict_views = {}
+    # values unchanged: every sibling in lockstep restamps onto the new
+    # chain segment
+    _maintain_siblings(spark, sf_dir, out_dir, {name: (
+        old_fp, new_fp, meta, _Delta(cols=frozenset()),
+    )})
     return {
         "rows": num_rows,
         "files_before": len(parts),
@@ -4625,14 +4570,12 @@ def _removed_batches(
 def _ingest_local_append(
     src: str,
     dst: str,
-    kd_dst: str,
     new_files: list[str],
     key: str | None,
-    kd_cols,
     target_rows: int,
     fingerprint: str,
     meta: dict,
-) -> None:
+) -> str:
     """Append-only ingest of a directory source's NEW part files (the 100 TB
     maintenance path: a daily landing adds files; re-laying-out the whole
     table per batch would be O(history) work per append).
@@ -4651,18 +4594,13 @@ def _ingest_local_append(
       partially appended batch — and a mid-append crash leaves the previous
       complete copy with its old marker (the next ingest just re-runs the
       delta).
-    - The key-dictionary projection MERGES (union keys, sum cnt) instead of
-      rebuilding — the exact contract merge_keydicts pins: per-key counts
-      add across batches, so the projection update costs O(batch + dict),
-      never O(history). It publishes AFTER the table: a crash in between
-      leaves the keydict's fingerprint behind the table's, which fails the
-      lockstep check and triggers a full keydict rebuild from the (already
-      appended) managed copy.
+
+    Returns the batch's tag (the ``a<tag>-`` part-file prefix); the
+    sibling artifacts merge the batch afterwards (_maintain_siblings).
     """
     import hashlib
 
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     unified = pa.unify_schemas(
@@ -4715,43 +4653,12 @@ def _ingest_local_append(
 
     _snapshot_generation(dst, "append")
     _publish_dir(dst, fingerprint, meta, _write_generation)
-    if kd_cols:
-        import glob
-
-        frames = [
-            pq.read_table(p)
-            for p in sorted(glob.glob(os.path.join(kd_dst, "*.parquet")))
-        ]
-        for c in kd_cols:
-            vc = pc.value_counts(batch.column(c).combine_chunks())
-            frames.append(
-                pa.table(
-                    {
-                        "col": pa.array([c] * len(vc)),
-                        "key": pc.cast(vc.field("values"), pa.int64()),
-                        "cnt": pc.cast(vc.field("counts"), pa.int64()),
-                    }
-                )
-            )
-        merged = merge_keydicts(frames)
-        _publish_colstats(
-            _colstats_from_keydict(merged, kd_cols),
-            kd_dst.replace(".keydict.parquet", ".colstats.parquet"),
-            fingerprint, meta,
-        )
-        _publish_dir(
-            kd_dst, fingerprint, meta,
-            lambda tmp: pq.write_table(
-                merged, os.path.join(tmp, "part-00000.parquet")
-            ),
-        )
+    return tag
 
 
 def _ingest_local_delete(
     dst: str,
-    kd_dst: str,
     tags: list[str],
-    kd_cols,
     fingerprint: str,
     meta: dict,
 ) -> str:
@@ -4766,11 +4673,7 @@ def _ingest_local_delete(
     sums subtract as exactly as they add, so every negative-merged
     projection is bit-identical to a from-scratch rebuild — pinned by the
     delete-path test suite."""
-    import shutil
     import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     drop = tuple(f"part-a{t}-" for t in tags)
     # pid + uuid suffix: two concurrent sessions deleting from the same
@@ -4797,14 +4700,6 @@ def _ingest_local_delete(
 
     _snapshot_generation(dst, "delete-batch")
     _publish_dir(dst, fingerprint, meta, _write_generation)
-    if kd_cols:
-        import glob
-
-        _keydict_negative_merge(
-            kd_dst,
-            sorted(glob.glob(os.path.join(hold, "*.parquet"))),
-            kd_cols, fingerprint, meta,
-        )
     return hold
 
 
@@ -4861,33 +4756,28 @@ def _kd_count_frames(paths, kd_cols, negate: bool) -> list:
     return frames
 
 
-def _keydict_negative_merge(
-    kd_dst: str, batch, kd_cols, fingerprint: str, meta: dict | None,
-    add_batch=None, precomputed: list | None = None,
+def _keydict_merge(
+    kd_dst: str, removed, added, kd_cols, fingerprint: str,
+    meta: dict | None, precomputed: list | None = None,
 ) -> None:
-    """Negative keydict/colstats merge from a batch of REMOVED rows: per-key
-    counts subtract as exactly as they add (merge_keydicts sums signed
+    """Signed keydict/colstats merge: the ``removed`` rows' per-key counts
+    subtract and the ``added`` rows' add (merge_keydicts sums signed
     deltas), zero-count keys drop, and a subtraction that would go below
     zero hard-fails — the removed rows then don't match the dictionary
-    state and the caller must rebuild instead. Shared by the whole-batch
-    delete path (_ingest_local_delete) and the predicate delete path
-    (delete_where). ``add_batch`` is the UPDATE path (update_where): the
-    rows' NEW versions merge positively in the same pass, so one publish
-    carries the remove+re-add and the dictionary can never be observed
-    mid-mutation.
+    state. One publish carries both sides, so an UPDATE's dictionary can
+    never be observed mid-mutation.
 
-    ``batch`` / ``add_batch`` are lists of held-file parquet paths: the
-    counts run per FILE with only the dictionary columns decoded, so
-    driver memory for a WIDE mutation is one file's key columns — never
-    the full held row set — and the count frames folded into
-    merge_keydicts stay O(distinct keys).
+    ``removed`` / ``added`` are lists of parquet paths: the counts run per
+    FILE with only the dictionary columns decoded, so driver memory for a
+    WIDE mutation is one file's key columns — never the full row set —
+    and the count frames folded into merge_keydicts stay O(distinct keys).
 
     ``precomputed`` is the DISTRIBUTED regime's form: the signed
     (col, key, cnt) tuples the `_split_files_via_spark` tasks already
     counted while each decoded its own file — the driver then does zero
-    parquet decodes here (batch/add_batch are ignored), so a wide
-    predicate mutation's counting wall-clock scales with the cluster,
-    not serially on the driver."""
+    parquet decodes here (the paths are ignored), so a wide predicate
+    mutation's counting wall-clock scales with the cluster, not serially
+    on the driver."""
     import glob
 
     import pyarrow.compute as pc
@@ -4900,9 +4790,8 @@ def _keydict_negative_merge(
     if precomputed is not None:
         frames += _kd_frames_from_counts(precomputed)
     else:
-        frames += _kd_count_frames(batch, kd_cols, negate=True)
-        if add_batch is not None:
-            frames += _kd_count_frames(add_batch, kd_cols, negate=False)
+        frames += _kd_count_frames(removed, kd_cols, negate=True)
+        frames += _kd_count_frames(added, kd_cols, negate=False)
     merged = merge_keydicts(frames)
     if len(merged) and pc.min(merged["cnt"]).as_py() < 0:
         raise RuntimeError(
@@ -5146,6 +5035,17 @@ def _split_files_dispatch(
     )
 
 
+def _managed_dir(sf_dir: str) -> str:
+    """The managed copy of ``sf_dir`` under INGEST_ROOT, keyed by basename
+    + path hash: two source dirs that share a basename (/a/sf0.1 vs
+    /b/sf0.1) must not collide on the same copy."""
+    import hashlib
+
+    norm = os.path.normpath(sf_dir)
+    digest = hashlib.md5(norm.encode()).hexdigest()[:8]
+    return os.path.join(INGEST_ROOT, f"{os.path.basename(norm)}-{digest}")
+
+
 def _mutation_target(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple[str, str]:
@@ -5155,16 +5055,10 @@ def _mutation_target(
     would fingerprint-miss and rewrite the whole catalog before the
     mutation even starts. Shared by delete_where / update_where /
     merge_into."""
-    import hashlib
     import re
 
-    norm = os.path.normpath(sf_dir)
-    probe_out = os.path.join(
-        INGEST_ROOT,
-        f"{os.path.basename(norm)}-{hashlib.md5(norm.encode()).hexdigest()[:8]}",
-    )
     _probe_fp, probe_meta = _read_marker(
-        os.path.join(probe_out, f"{name}.parquet", "_SUCCESS")
+        os.path.join(_managed_dir(sf_dir), f"{name}.parquet", "_SUCCESS")
     )
     m = re.fullmatch(
         r"parts=(\d+):split=(\d+):v\d+", probe_meta.get("layout") or ""
@@ -5285,26 +5179,16 @@ def delete_where(
 
     ``predicate`` is a pyarrow dataset expression (e.g.
     ``pc.field("o_orderstatus") == "F"``), evaluated with SQL DELETE
-    semantics (NULL-predicate rows survive). Maintenance per artifact:
-
-    - **managed table**: part files with no match (stats-pruned check)
-      hardlink into the new generation byte-untouched; only files with
-      matches rewrite (minus their matched rows). A predicate on the
-      range-cluster key touches O(matching files) by min/max pruning.
-    - **bucketed fact copies**: same per-file split over the bucket files
-      — O(affected buckets); file names (bucket suffix + append tags)
-      are preserved so bucket placement and later whole-batch deletes
-      keep working. Emptied bucket files stay as 0-row parquet.
-    - **SUM-mergeable projections** (keydict/colstats, aggregate rollups,
-      star rollups): NEGATIVE merges from exactly the removed rows —
-      integer partial sums subtract as exactly as they add, so the merged
-      projection is bit-identical to a from-scratch rebuild (pinned by the
-      predicate-delete test suite). Star rollups delete-IVM via the same
-      path the whole-batch delete uses.
-    - **ordered/vector artifacts** (top-k projection, cosine pairs, k-NN
-      graph): rebuilt — a removed top row needs a replacement no merge can
-      produce. The sessions artifact re-sessionizes only affected users
-      and rewrites only their buckets (delete-valid merger).
+    semantics (NULL-predicate rows survive). Part files with no match
+    (stats-pruned check) hardlink into the new generation byte-untouched;
+    only files with matches rewrite (minus their matched rows). A predicate
+    on the range-cluster key touches O(matching files) by min/max pruning.
+    The removed rows are the delta every sibling artifact folds in (see
+    the rule table of _maintain_siblings): SUM-mergeable projections
+    negative-merge them exactly, the bucketed copies rewrite only the
+    bucket files with matches (names preserved, emptied files stay as
+    0-row parquet), and ordered/vector artifacts rebuild unless the
+    removed rows provably cannot reach them.
 
     Persistence: the table's marker fingerprint gains a ``~del<h>``
     segment (h = md5 of the prior fingerprint + the predicate string), and
@@ -5325,6 +5209,18 @@ def delete_where(
     right-to-be-forgotten, bad-shard excision) a 100 TB training-data
     pipeline needs.
     """
+    return _predicate_dml(spark, sf_dir, name, predicate, None, _cc_retries)
+
+
+def _predicate_dml(
+    spark: SparkSession, sf_dir: str, name: str, predicate, assignments,
+    retries: int | None,
+) -> int:
+    """Shared body of delete_where (``assignments`` None) and update_where:
+    split the candidate part files by ``predicate``, claim the next
+    generation, publish it, and hand the matched rows (and, for an update,
+    their new versions) to _maintain_siblings. Returns the matched row
+    count."""
     import glob
     import hashlib
     import shutil
@@ -5334,25 +5230,60 @@ def delete_where(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    op = "delete" if assignments is None else "update"
     out_dir, dst = _mutation_target(spark, sf_dir, name)
-    table_marker = os.path.join(dst, "_SUCCESS")
-    old_fp, old_meta = _read_marker(table_marker)
+    old_fp, old_meta = _read_marker(os.path.join(dst, "_SUCCESS"))
+    if retries is None:
+        retries = COMMIT_RETRIES
 
-    if _cc_retries is None:
-        _cc_retries = COMMIT_RETRIES
-    hold = dst + f".dropped-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.makedirs(hold)
-    survivors: dict = {}
-    n_deleted = 0
-    stage = None
+    def again() -> int:
+        return _predicate_dml(
+            spark, sf_dir, name, predicate, assignments, retries - 1
+        )
+
+    try:
+        parts = sorted(f for f in os.listdir(dst) if f.endswith(".parquet"))
+        if assignments is not None:
+            # validate the SET clause on the DRIVER before dispatching any
+            # work: an unknown column must raise a clear ValueError here,
+            # never a Py4J-wrapped executor traceback from a distributed task
+            known = set(pq.read_schema(os.path.join(dst, parts[0])).names)
+    # raced a concurrent publish's dir swap: a torn read_schema during the
+    # swap can surface as ArrowInvalid (corrupt footer), not just OSError —
+    # same classification as the main compute phase below
+    except (OSError, pa.ArrowInvalid) as exc:
+        _read_raced(exc, dst, name, op, old_fp, retries)
+        return again()
+    for col in assignments or ():
+        if col not in known:
+            raise ValueError(f"UPDATE of unknown column {col!r}")
+    # columns whose values this update can change — assigned ones plus any
+    # shred re-derived from an assigned source (None: rows go away)
+    cols = None if assignments is None else frozenset(assignments) | {
+        d for s, (d, _p) in _SHRED_COLUMNS.items() if s in assignments
+    }
+    tag = f"{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    # matched rows (old versions), and an update's new versions
+    hold = dst + (".dropped-" if assignments is None else ".updold-") + tag
+    hold_new = None if assignments is None else dst + ".updnew-" + tag
+    scratch = [d for d in (hold, hold_new) if d]
+    for d in scratch:
+        os.makedirs(d)
+
+    def drop_scratch() -> None:
+        for d in scratch:
+            shutil.rmtree(d, ignore_errors=True)
+
+    # part file -> its new content: a table, a staged file, or None when no
+    # row survives
+    changed: dict = {}
+    n = 0
+    kd_counts: list | None = None
     # The compute phase below is OPTIMISTIC: it reads the current generation
     # without holding anything, so a concurrent winner's publish can swap the
     # directory mid-read (torn parquet open). _read_raced classifies that
     # failure: fingerprint moved -> re-apply like a CAS loss; else re-raise.
     try:
-        parts = sorted(
-            f for f in os.listdir(dst) if f.endswith(".parquet")
-        )
         # Point-predicate fast path: resolve bucket-key predicates against
         # the key-sorted bucketed copy and skip main files whose cluster
         # range excludes every matched row — O(metadata) for unaffected
@@ -5377,25 +5308,30 @@ def delete_where(
             os.path.getsize(os.path.join(dst, f)) for f in to_split
         )
         kd_cols = _DICT_LAYOUT.get(name)
-        kd_counts: list | None = None
+        if kd_cols and cols is not None and cols.isdisjoint(kd_cols):
+            # dictionary counts only change when the SET clause touches a
+            # dictionary column — tasks never count for nothing
+            kd_cols = None
         if _dml_distributed(cand_bytes):
-            stage = dst + f".stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+            stage = dst + f".stage-{tag}"
             os.makedirs(stage)
-            # tasks count the dictionary-column deltas of the rows they
-            # remove while they already have the file decoded — the keydict
-            # merge below then needs no driver-side parquet decode at all
+            scratch.append(stage)
+            # tasks stage each file's replacement and count the dictionary
+            # deltas while they have the file decoded: the driver only
+            # links paths, and the keydict merge decodes no parquet
             kd_counts = []
-            for f, n_matched, n_staged, kd_neg, _kd_pos in (
+            for f, n_matched, n_staged, kd_neg, kd_pos in (
                 _split_files_via_spark(
                     spark, dst, to_split, predicate, hold, stage,
+                    assignments=assignments, hold_new=hold_new,
                     kd_cols=kd_cols,
                 )
             ):
                 if n_matched < 0:
                     continue
-                n_deleted += n_matched
-                kd_counts += kd_neg
-                survivors[f] = os.path.join(stage, f) if n_staged else None
+                n += n_matched
+                kd_counts += kd_neg + kd_pos
+                changed[f] = os.path.join(stage, f) if n_staged else None
         else:
             with ThreadPoolExecutor(
                 max_workers=min(8, max(1, len(to_split) or 1))
@@ -5414,21 +5350,19 @@ def delete_where(
             for f, matched, rest in splits:
                 if matched is None:
                     continue
-                n_deleted += matched.num_rows
+                n += matched.num_rows
                 pq.write_table(matched, os.path.join(hold, f))
-                survivors[f] = rest
+                if assignments is not None:
+                    updated = _apply_update(matched, assignments)
+                    pq.write_table(updated, os.path.join(hold_new, f))
+                    rest = pa.concat_tables([rest, updated])
+                changed[f] = rest
     except (OSError, pa.ArrowInvalid) as exc:
-        shutil.rmtree(hold, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
-        _read_raced(exc, dst, name, "delete", old_fp, _cc_retries)
-        return delete_where(
-            spark, sf_dir, name, predicate, _cc_retries=_cc_retries - 1
-        )
-    if expected_n is not None and n_deleted != expected_n:
-        shutil.rmtree(hold, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
+        drop_scratch()
+        _read_raced(exc, dst, name, op, old_fp, retries)
+        return again()
+    if expected_n is not None and n != expected_n:
+        drop_scratch()
         # A torn read that does NOT raise (main files re-listed from a
         # concurrent winner's new generation while the prune candidates
         # were resolved against old_fp) lands here: classify by fingerprint
@@ -5437,58 +5371,56 @@ def delete_where(
         _read_raced(
             RuntimeError(
                 f"point-prune count mismatch on {name!r}: bucketed copy "
-                f"matched {expected_n} rows, main split found {n_deleted} "
+                f"matched {expected_n} rows, main split found {n} "
                 f"— the copies disagree; refusing the mutation"
             ),
-            dst, name, "delete", old_fp, _cc_retries,
+            dst, name, op, old_fp, retries,
         )
-        return delete_where(
-            spark, sf_dir, name, predicate, _cc_retries=_cc_retries - 1
-        )
-    if n_deleted == 0:
-        shutil.rmtree(hold, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
+        return again()
+    if n == 0:
+        drop_scratch()
         return 0
 
-    h = hashlib.md5(f"{old_fp}|{predicate}".encode()).hexdigest()[:8]
-    new_fp = f"{old_fp}~del{h}"
+    digest = hashlib.md5(f"{old_fp}|{predicate}".encode())
+    if assignments is None:
+        new_fp = f"{old_fp}~del{digest.hexdigest()[:8]}"
+    else:
+        for col in sorted(assignments):
+            digest.update(f"|set:{col}".encode())
+        for p in sorted(os.listdir(hold_new)):
+            with open(os.path.join(hold_new, p), "rb") as fh:
+                digest.update(fh.read())
+        new_fp = f"{old_fp}~upd{digest.hexdigest()[:8]}"
 
     # Optimistic concurrency: claim the next generation before publishing.
     # A concurrent mutation that got there first means the matches above
     # were computed against a superseded snapshot — discard the staged
-    # work, wait for the winner's publish, re-apply (bounded retries).
+    # work, wait for the winner's publish, re-apply (bounded retries;
+    # UPDATE is not idempotent, so the await-then-re-apply ordering is what
+    # keeps SET x = x + 1 exactly-once per invocation under concurrency).
     outcome, other = _commit_try(
-        dst, op="delete", fp_before=old_fp, fp_after=new_fp,
-        reads=list(to_split), writes=list(survivors),
+        dst, op=op, fp_before=old_fp, fp_after=new_fp,
+        reads=list(to_split), writes=list(changed),
     )
     if outcome != "won":
-        shutil.rmtree(hold, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
+        drop_scratch()
         _commit_lost(
-            dst, name, op="delete", other=other, reads=list(to_split),
-            retries=_cc_retries,
+            dst, name, op=op, other=other, reads=list(to_split),
+            retries=retries,
         )
-        return delete_where(
-            spark, sf_dir, name, predicate, _cc_retries=_cc_retries - 1
-        )
+        return again()
 
     def _write_generation(tmp: str) -> None:
         wrote = False
         for f in parts:
-            if f in survivors:
-                s = survivors[f]
-                if s is None or (not isinstance(s, str) and not s.num_rows):
-                    continue  # no surviving rows in this file
-                if isinstance(s, str):  # distributed mode staged the file
-                    os.link(s, os.path.join(tmp, f))
-                else:
-                    pq.write_table(s, os.path.join(tmp, f))
-                wrote = True
+            new = changed[f] if f in changed else os.path.join(dst, f)
+            if new is None or (not isinstance(new, str) and not new.num_rows):
+                continue  # no surviving rows in this file
+            if isinstance(new, str):  # untouched, or staged by a Spark task
+                os.link(new, os.path.join(tmp, f))
             else:
-                os.link(os.path.join(dst, f), os.path.join(tmp, f))
-                wrote = True
+                pq.write_table(new, os.path.join(tmp, f))
+            wrote = True
         if not wrote:
             # every row deleted: keep one 0-row file so the managed dir
             # still carries the table's schema for readers
@@ -5500,118 +5432,25 @@ def delete_where(
                 os.path.join(tmp, "part-00000.parquet"),
             )
 
-    _snapshot_generation(dst, "delete")
+    def held(d: str | None) -> tuple:
+        return tuple(sorted(glob.glob(os.path.join(d, "*.parquet")))) if d else ()
+
+    _snapshot_generation(dst, op)
     _publish_dir(dst, new_fp, old_meta, _write_generation)
-
-    held_paths = sorted(glob.glob(os.path.join(hold, "*.parquet")))
-    if kd_cols:
-        # distributed regime: the split tasks already counted the deltas
-        # (kd_counts); local regime: per-file, dictionary-columns-only
-        # counting — driver memory stays one file's key columns either way
-        _keydict_negative_merge(
-            os.path.join(out_dir, f"{name}.keydict.parquet"),
-            held_paths, kd_cols, new_fp, old_meta,
-            precomputed=kd_counts,
-        )
-    ap_spec = _AGG_PROJECTIONS.get(name)
-    if ap_spec:
-        ap_dst = os.path.join(out_dir, f"{name}.aggproj.parquet")
-        _build_aggproj(
-            spark, ap_spec, held_paths, ap_dst, new_fp, old_meta,
-            merge_with=ap_dst, negate=True,
-        )
-        if "coarse" in ap_spec:
-            _build_coarse_aggproj(
-                spark, ap_spec, ap_dst, _coarse_dst(out_dir, name, ap_spec),
-                new_fp, old_meta,
-            )
-    tp_spec = _TOPK_PROJECTIONS.get(name)
-    if tp_spec:
-        tp_dst = os.path.join(
-            out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
-        )
-        # membership-pruned maintenance: removing rows that provably sort
-        # after the current boundary cannot change the top-n — restamp
-        # instead of paying a full-scan rebuild per point delete
-        if _read_marker(os.path.join(tp_dst, "_SUCCESS"))[
-            0
-        ] == old_fp and _topk_unaffected(tp_dst, tp_spec, held_paths):
-            _restamp_marker(tp_dst, old_fp, new_fp)
-        else:
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, new_fp, old_meta)
-    bk_col = _BUCKET_LAYOUT.get(name)
-    if bk_col:
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-        nb = bk_meta.get("n_buckets")
-        if nb and bk_have == f"{old_fp}:bk{nb}":
-            # targeted rewrite: only bucket files with matches rewrite
-            # (names preserved — bucket ids ride the _NNNNN suffix and
-            # append tags the a<tag>- prefix); the rest hardlink
-            def _write_buckets(tmp: str) -> None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                entries = [
-                    e
-                    for e in os.scandir(bk_dst)
-                    if e.is_file() and e.name.endswith(".parquet")
-                ]
-
-                def _one(entry) -> None:
-                    b_matched, b_rest = _split_file_by_predicate(
-                        entry.path, predicate
-                    )
-                    if b_matched is None:
-                        os.link(entry.path, os.path.join(tmp, entry.name))
-                    else:
-                        pq.write_table(b_rest, os.path.join(tmp, entry.name))
-
-                with ThreadPoolExecutor(
-                    max_workers=min(8, max(1, len(entries)))
-                ) as bpool:
-                    list(bpool.map(_one, entries))
-
-            _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
-        else:
-            cpus = int(
-                os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
-            )
-            nb = max(8, cpus)
-            _build_bucketed(
-                spark, dst, bk_dst, bk_col, nb, f"{new_fp}:bk{nb}",
-                {"bucket_col": bk_col, "n_buckets": nb},
-            )
-
-    # star rollups + result projections: same maintainers the ingest delta
-    # paths use, with the removed rows as the delete delta
-    tbl_state: dict[str, dict] = {}
-    for t in TABLES:
-        t_dst = os.path.join(out_dir, f"{t}.parquet")
-        fp, _tm = _read_marker(os.path.join(t_dst, "_SUCCESS"))
-        if fp:
-            tbl_state[t] = {"fp": fp, "src": t_dst, "delta": None}
-    tbl_state[name]["prev_fp"] = old_fp
-    tbl_state[name]["removed_paths"] = held_paths
-    spark._lianjia_joinproj_ivm = _maintain_join_projections(
-        spark, out_dir, tbl_state
-    )
-    spark._lianjia_resultproj_merged = _maintain_result_projections(
-        spark, out_dir, tbl_state
-    )
-    shutil.rmtree(hold, ignore_errors=True)
-    if stage:  # staged survivor files were hardlinked into the generation
-        shutil.rmtree(stage, ignore_errors=True)
-    # invalidate memoized DataFrames/views over the pre-delete generation
-    spark._lianjia_table_cache = {}
-    spark._lianjia_views_dir = None
-    spark._lianjia_keydict_views = {}
-    # pinned artifacts refresh inside the commit window (they are sibling
-    # artifacts too — the completion marker must cover their maintenance)
-    _refresh_pins(spark, out_dir, sf_dir)
+    _maintain_siblings(spark, sf_dir, out_dir, {name: (
+        old_fp, new_fp, old_meta,
+        _Delta(
+            removed=held(hold), added=held(hold_new), cols=cols,
+            rewrite=_bucket_rewrite(predicate, assignments),
+            kd_counts=kd_counts,
+        ),
+    )})
+    # staged files were hardlinked into the generation
+    drop_scratch()
     # commit fully complete: table + every sibling artifact settled —
     # release any waiting concurrent writer (see _commit_done)
     _commit_done(dst, other)
-    return n_deleted
+    return n
 
 
 def _apply_assignments(matched, assignments):
@@ -5688,33 +5527,22 @@ def update_where(
     ``predicate`` is a pyarrow dataset expression with SQL UPDATE
     semantics (NULL-predicate rows are untouched); ``assignments`` is the
     SET clause (see :func:`_apply_assignments`), evaluated against the OLD
-    row values, so ``SET x = x + 1`` works. Maintenance per artifact:
+    row values, so ``SET x = x + 1`` works. Part files with no match
+    (stats-pruned check) hardlink into the new generation byte-untouched;
+    files with matches rewrite as survivors + updated rows (same file
+    name, so append tags and bucket placement survive). Range clustering
+    within a rewritten file loosens if the cluster key itself was updated
+    — the standard copy-on-write trade, restored by compaction.
 
-    - **managed table**: part files with no match (stats-pruned check)
-      hardlink into the new generation byte-untouched; files with matches
-      rewrite as survivors + updated rows (same file name, so append tags
-      and bucket placement survive). Range clustering within a rewritten
-      file loosens if the cluster key itself was updated — the standard
-      copy-on-write trade, restored by compaction.
-    - **SUM-mergeable projections** (keydict/colstats, aggregate rollups,
-      star rollups): one NEGATIVE merge of the old row versions plus one
-      POSITIVE merge of the new versions — integer partial sums subtract
-      and re-add exactly, so the merged projection is bit-identical to a
-      from-scratch rebuild even when the update moves rows across group
-      keys. The keydict absorbs both sides in a single publish; rollups
-      publish the intermediate negative merge under ``<fp>:neg`` (never
-      serveable — it matches no table state) so a crash between the two
-      merges is refused by lockstep and rebuilt on the next ingest.
-    - **bucketed fact copies**: per-file split+rewrite of only the bucket
-      files with matches — unless the UPDATE touches the bucket key
-      itself, which moves rows across buckets and rebuilds.
-    - **ordered/vector artifacts** (top-k projection, cosine pairs, k-NN
-      graph): rebuilt — an updated measure can promote a row no merge can
-      produce. Result projections whose merger re-derives affected state
-      from the post-change table (sessions, per-customer leaderboard)
-      update-merge with the union of old+new row versions; row-local
-      filter views (regex match) compose their delete-merge (old doc ids
-      out) with their append-merge (new versions filtered in).
+    The delta the siblings fold in (see the rule table of
+    _maintain_siblings) is the pair (old row versions, new row versions)
+    plus the updated columns: an artifact that reads none of them
+    restamps; SUM-mergeable projections take a NEGATIVE merge of the old
+    versions and a POSITIVE merge of the new — exact even when the update
+    moves rows across group keys (rollups publish the intermediate under
+    ``<fp>:neg``, which no reader accepts); the bucketed copies rewrite
+    only affected bucket files unless the bucket key changes; ordered and
+    vector artifacts rebuild unless no row version can reach them.
 
     Persistence mirrors delete_where: the marker fingerprint gains a
     ``~upd<h>`` segment (h = md5 of prior fingerprint + predicate +
@@ -5731,377 +5559,9 @@ def update_where(
     training-data pipeline needs. On a cluster the per-file pass is one
     task per file; the thread pool is the local-regime analogue.
     """
-    import glob
-    import hashlib
-    import shutil
-    import uuid
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    out_dir, dst = _mutation_target(spark, sf_dir, name)
-    table_marker = os.path.join(dst, "_SUCCESS")
-    old_fp, old_meta = _read_marker(table_marker)
-
-    if _cc_retries is None:
-        _cc_retries = COMMIT_RETRIES
-    try:
-        parts = sorted(
-            f for f in os.listdir(dst) if f.endswith(".parquet")
-        )
-        # validate the SET clause on the DRIVER before dispatching any
-        # work: an unknown column must raise a clear ValueError here,
-        # never a Py4J-wrapped executor traceback from a distributed task
-        known = set(pq.read_schema(os.path.join(dst, parts[0])).names)
-    # raced a concurrent publish's dir swap: a torn read_schema during the
-    # swap can surface as ArrowInvalid (corrupt footer), not just OSError —
-    # same classification as the main compute phase below
-    except (OSError, pa.ArrowInvalid) as exc:
-        _read_raced(exc, dst, name, "update", old_fp, _cc_retries)
-        return update_where(
-            spark, sf_dir, name, predicate, assignments,
-            _cc_retries=_cc_retries - 1,
-        )
-    for col in assignments:
-        if col not in known:
-            raise ValueError(f"UPDATE of unknown column {col!r}")
-    hold_old = dst + f".updold-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    hold_new = dst + f".updnew-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    os.makedirs(hold_old)
-    os.makedirs(hold_new)
-    rewritten: dict = {}
-    n_updated = 0
-    stage = None
-    # OPTIMISTIC compute phase — torn reads under a concurrent publish
-    # re-apply via _read_raced, exactly like a CAS loss (see delete_where).
-    try:
-        # point-predicate fast path + count cross-check — see delete_where
-        candidates, expected_n = _point_prune_candidates(
-            out_dir, name, dst, parts, predicate, old_fp
-        )
-        to_split = (
-            parts
-            if candidates is None
-            else [f for f in parts if f in candidates]
-        )
-        cand_bytes = sum(
-            os.path.getsize(os.path.join(dst, f)) for f in to_split
-        )
-        kd_cols = _DICT_LAYOUT.get(name)
-        # dictionary counts only change when the SET clause touches a
-        # dictionary column (shred-derived ones included) — mirrors the
-        # restamp-vs-merge decision below, so tasks never count for nothing
-        kd_touched = bool(kd_cols) and not (
-            set(assignments)
-            | {
-                d
-                for src, (d, _p) in _SHRED_COLUMNS.items()
-                if src in assignments
-            }
-        ).isdisjoint(kd_cols)
-        kd_counts: list | None = None
-        if _dml_distributed(cand_bytes):
-            # one Spark task per candidate file (see _split_files_via_spark):
-            # tasks stage each rewritten file; the driver only links paths
-            stage = dst + f".stage-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-            os.makedirs(stage)
-            kd_counts = []
-            for f, n_matched, _n_staged, kd_neg, kd_pos in (
-                _split_files_via_spark(
-                    spark, dst, to_split, predicate, hold_old, stage,
-                    assignments=assignments, hold_new=hold_new,
-                    kd_cols=kd_cols if kd_touched else None,
-                )
-            ):
-                if n_matched < 0:
-                    continue
-                n_updated += n_matched
-                kd_counts += kd_neg + kd_pos
-                rewritten[f] = os.path.join(stage, f)
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(8, max(1, len(to_split) or 1))
-            ) as pool:
-                splits = list(
-                    pool.map(
-                        lambda f: (
-                            f,
-                            *_split_file_by_predicate(
-                                os.path.join(dst, f), predicate
-                            ),
-                        ),
-                        to_split,
-                    )
-                )
-            for f, matched, rest in splits:
-                if matched is None:
-                    continue
-                updated = _apply_update(matched, assignments)
-                n_updated += matched.num_rows
-                pq.write_table(matched, os.path.join(hold_old, f))
-                pq.write_table(updated, os.path.join(hold_new, f))
-                rewritten[f] = pa.concat_tables([rest, updated])
-    except (OSError, pa.ArrowInvalid) as exc:
-        shutil.rmtree(hold_old, ignore_errors=True)
-        shutil.rmtree(hold_new, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
-        _read_raced(exc, dst, name, "update", old_fp, _cc_retries)
-        return update_where(
-            spark, sf_dir, name, predicate, assignments,
-            _cc_retries=_cc_retries - 1,
-        )
-    if expected_n is not None and n_updated != expected_n:
-        shutil.rmtree(hold_old, ignore_errors=True)
-        shutil.rmtree(hold_new, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
-        # non-raising torn read under a concurrent publish — classify by
-        # fingerprint exactly like the delete path (see delete_where)
-        _read_raced(
-            RuntimeError(
-                f"point-prune count mismatch on {name!r}: bucketed copy "
-                f"matched {expected_n} rows, main split found {n_updated} "
-                f"— the copies disagree; refusing the mutation"
-            ),
-            dst, name, "update", old_fp, _cc_retries,
-        )
-        return update_where(
-            spark, sf_dir, name, predicate, assignments,
-            _cc_retries=_cc_retries - 1,
-        )
-    # columns whose values this update can change — assigned ones plus any
-    # shred re-derived from an assigned source; drives the relevance
-    # restamps below (a projection that never reads an updated column is
-    # provably unchanged and restamps instead of merging/rebuilding)
-    upd_cols = set(assignments) | {
-        dst
-        for src, (dst, _p) in _SHRED_COLUMNS.items()
-        if src in assignments and dst not in assignments
-    }
-    if n_updated == 0:
-        shutil.rmtree(hold_old, ignore_errors=True)
-        shutil.rmtree(hold_new, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
-        return 0
-
-    new_digest = hashlib.md5(f"{old_fp}|{predicate}".encode())
-    for col in sorted(assignments):
-        new_digest.update(f"|set:{col}".encode())
-    for p in sorted(os.listdir(hold_new)):
-        with open(os.path.join(hold_new, p), "rb") as fh:
-            new_digest.update(fh.read())
-    new_fp = f"{old_fp}~upd{new_digest.hexdigest()[:8]}"
-
-    # Optimistic concurrency — same CAS contract as delete_where: only the
-    # commit-log winner publishes; a loser re-evaluates its matches against
-    # the winner's published snapshot (UPDATE is not idempotent, so the
-    # await-then-re-apply ordering is what keeps SET x = x + 1 exactly-once
-    # per invocation under concurrency).
-    outcome, other = _commit_try(
-        dst, op="update", fp_before=old_fp, fp_after=new_fp,
-        reads=list(to_split), writes=list(rewritten),
+    return _predicate_dml(
+        spark, sf_dir, name, predicate, assignments, _cc_retries
     )
-    if outcome != "won":
-        shutil.rmtree(hold_old, ignore_errors=True)
-        shutil.rmtree(hold_new, ignore_errors=True)
-        if stage:
-            shutil.rmtree(stage, ignore_errors=True)
-        _commit_lost(
-            dst, name, op="update", other=other, reads=list(to_split),
-            retries=_cc_retries,
-        )
-        return update_where(
-            spark, sf_dir, name, predicate, assignments,
-            _cc_retries=_cc_retries - 1,
-        )
-
-    def _write_generation(tmp: str) -> None:
-        for f in parts:
-            if f in rewritten:
-                r = rewritten[f]
-                if isinstance(r, str):  # distributed mode staged the file
-                    os.link(r, os.path.join(tmp, f))
-                else:
-                    pq.write_table(r, os.path.join(tmp, f))
-            else:
-                os.link(os.path.join(dst, f), os.path.join(tmp, f))
-
-    _snapshot_generation(dst, "update")
-    _publish_dir(dst, new_fp, old_meta, _write_generation)
-
-    held_old = sorted(glob.glob(os.path.join(hold_old, "*.parquet")))
-    held_new = sorted(glob.glob(os.path.join(hold_new, "*.parquet")))
-    table_cols = set(pq.read_schema(held_old[0]).names)
-    if kd_cols:
-        kd_dst = os.path.join(out_dir, f"{name}.keydict.parquet")
-        cs_dst = os.path.join(out_dir, f"{name}.colstats.parquet")
-        if upd_cols.isdisjoint(kd_cols):
-            # no dictionary column changed value: counts are untouched
-            _restamp_marker(kd_dst, old_fp, new_fp)
-            _restamp_marker(cs_dst, old_fp, new_fp)
-        else:
-            _keydict_negative_merge(
-                kd_dst, held_old, kd_cols, new_fp, old_meta,
-                add_batch=held_new,
-                precomputed=kd_counts,
-            )
-    ap_spec = _AGG_PROJECTIONS.get(name)
-    if ap_spec:
-        ap_dst = os.path.join(out_dir, f"{name}.aggproj.parquet")
-        ap_text = " ".join(
-            list(ap_spec["keys"])
-            + list(ap_spec.get("key_exprs", {}).values())
-            + list(ap_spec["measures"].values())
-        )
-        ap_ref = _referenced_cols(ap_text, table_cols | {"ts_ns"})
-        if "ts_ns" in ap_ref:
-            # the events specs read the DERIVED ts_ns; the managed column
-            # backing it is ts (nanos-as-long form) or ts_ns — an update
-            # to either must count as touching the spec
-            ap_ref |= {"ts", "ts_ns"}
-        if upd_cols.isdisjoint(ap_ref):
-            _restamp_marker(ap_dst, old_fp, new_fp)
-            if "coarse" in ap_spec:
-                _restamp_marker(
-                    _coarse_dst(out_dir, name, ap_spec), old_fp, new_fp
-                )
-        else:
-            # two-step IVM: negative merge publishes under an intermediate
-            # fingerprint no reader accepts, then the positive merge lands
-            # the final one — a crash in between leaves the rollup refused
-            # by lockstep and rebuilt on the next ingest, never served
-            # half-merged
-            _build_aggproj(
-                spark, ap_spec, held_old, ap_dst, f"{new_fp}:neg", old_meta,
-                merge_with=ap_dst, negate=True,
-            )
-            _build_aggproj(
-                spark, ap_spec, held_new, ap_dst, new_fp, old_meta,
-                merge_with=ap_dst,
-            )
-            if "coarse" in ap_spec:
-                _build_coarse_aggproj(
-                    spark, ap_spec, ap_dst,
-                    _coarse_dst(out_dir, name, ap_spec), new_fp, old_meta,
-                )
-    tp_spec = _TOPK_PROJECTIONS.get(name)
-    if tp_spec:
-        tp_dst = os.path.join(
-            out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
-        )
-        # provably unchanged when (a) no projected/order column was
-        # updated, or (b) neither the old nor the new row versions can
-        # reach the boundary — restamp instead of rebuilding
-        tp_cols = set(tp_spec["cols"]) | _referenced_cols(
-            tp_spec["order_sql"], table_cols
-        )
-        tp_lockstep = (
-            _read_marker(os.path.join(tp_dst, "_SUCCESS"))[0] == old_fp
-        )
-        if tp_lockstep and (
-            upd_cols.isdisjoint(tp_cols)
-            or _topk_unaffected(tp_dst, tp_spec, held_old + held_new)
-        ):
-            _restamp_marker(tp_dst, old_fp, new_fp)
-        else:
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, new_fp, old_meta)
-    bk_col = _BUCKET_LAYOUT.get(name)
-    if bk_col:
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        bk_have, bk_meta = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-        nb = bk_meta.get("n_buckets")
-        if (
-            nb
-            and bk_have == f"{old_fp}:bk{nb}"
-            # gate on the DERIVED update set, not the raw assignments: a
-            # shred re-derivation (events.props -> props_k) counts as
-            # touching that column, and if the bucket key were ever a
-            # derived column the targeted path must not hold it still
-            and bk_col not in upd_cols
-        ):
-            # targeted rewrite: the bucket key is untouched, so updated
-            # rows stay in their bucket — only files with matches rewrite
-            def _write_buckets(tmp: str) -> None:
-                entries = [
-                    e
-                    for e in os.scandir(bk_dst)
-                    if e.is_file() and e.name.endswith(".parquet")
-                ]
-
-                def _one(entry) -> None:
-                    b_matched, b_rest = _split_file_by_predicate(
-                        entry.path, predicate
-                    )
-                    if b_matched is None:
-                        os.link(entry.path, os.path.join(tmp, entry.name))
-                    else:
-                        # _apply_update, not _apply_assignments: the
-                        # bucketed copy must re-derive shredded columns
-                        # exactly like the main table's rewrite did, or a
-                        # bucketed table with a JSON shred would publish a
-                        # copy whose shred diverges under a fresh
-                        # fingerprint
-                        pq.write_table(
-                            pa.concat_tables(
-                                [b_rest, _apply_update(b_matched, assignments)]
-                            ),
-                            os.path.join(tmp, entry.name),
-                        )
-
-                with ThreadPoolExecutor(
-                    max_workers=min(8, max(1, len(entries)))
-                ) as bpool:
-                    list(bpool.map(_one, entries))
-
-            _publish_dir(bk_dst, f"{new_fp}:bk{nb}", bk_meta, _write_buckets)
-        else:
-            # bucket-key update moves rows across buckets: rebuild
-            cpus = int(
-                os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
-            )
-            nb = max(8, cpus)
-            _build_bucketed(
-                spark, dst, bk_dst, bk_col, nb, f"{new_fp}:bk{nb}",
-                {"bucket_col": bk_col, "n_buckets": nb},
-            )
-
-    # star rollups + result projections: update deltas are (old rows,
-    # new rows) pairs — the maintainers negative+positive merge or
-    # delegate to update-capable mergers (see their docstrings)
-    tbl_state: dict[str, dict] = {}
-    for t in TABLES:
-        t_dst = os.path.join(out_dir, f"{t}.parquet")
-        fp, _tm = _read_marker(os.path.join(t_dst, "_SUCCESS"))
-        if fp:
-            tbl_state[t] = {"fp": fp, "src": t_dst, "delta": None}
-    tbl_state[name]["prev_fp"] = old_fp
-    tbl_state[name]["updated_old_paths"] = held_old
-    tbl_state[name]["updated_new_paths"] = held_new
-    tbl_state[name]["updated_cols"] = upd_cols
-    spark._lianjia_joinproj_ivm = _maintain_join_projections(
-        spark, out_dir, tbl_state
-    )
-    spark._lianjia_resultproj_merged = _maintain_result_projections(
-        spark, out_dir, tbl_state
-    )
-    shutil.rmtree(hold_old, ignore_errors=True)
-    shutil.rmtree(hold_new, ignore_errors=True)
-    if stage:  # staged rewritten files were hardlinked into the generation
-        shutil.rmtree(stage, ignore_errors=True)
-    # invalidate memoized DataFrames/views over the pre-update generation
-    spark._lianjia_table_cache = {}
-    spark._lianjia_views_dir = None
-    spark._lianjia_keydict_views = {}
-    # pinned artifacts refresh inside the commit window (they are sibling
-    # artifacts too — the completion marker must cover their maintenance)
-    _refresh_pins(spark, out_dir, sf_dir)
-    # commit fully complete: table + every sibling artifact settled —
-    # release any waiting concurrent writer (see _commit_done)
-    _commit_done(dst, other)
-    return n_updated
 
 
 def merge_into(
@@ -6272,24 +5732,16 @@ def ingest_tables(
     O(history). Any non-additive change (part rewritten or removed, layout
     knobs changed) falls back to the full rebuild.
     """
-    import hashlib
-
-    norm = os.path.normpath(sf_dir)
-    # Key the managed dir by basename + path hash: two source dirs that share
-    # a basename (/a/sf0.1 vs /b/sf0.1) must not collide on the same copy.
-    base = os.path.basename(norm)
-    out_dir = os.path.join(
-        INGEST_ROOT, f"{base}-{hashlib.md5(norm.encode()).hexdigest()[:8]}"
-    )
+    out_dir = _managed_dir(sf_dir)
     os.makedirs(out_dir, exist_ok=True)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     rebuilt = 0
     appended = 0
     deleted = 0
     hold_dirs: list[str] = []  # dropped-batch holding dirs, removed at end
-    # per-table outcome of THIS call, consumed by the join-projection pass
-    # below: fingerprint + whether the table took the append-only path
-    tbl_state: dict[str, dict] = {}
+    # per-table (old_fp, new_fp, meta, delta) of THIS call, for the
+    # sibling maintainer
+    changes: dict[str, tuple] = {}
     for name in TABLES:
         src = table_path(sf_dir, name)
         if not os.path.exists(src):
@@ -6331,294 +5783,110 @@ def ingest_tables(
         meta: dict = {"layout": layout}
         if manifest is not None:
             meta["parts"] = manifest
-        tbl_state[name] = {"fp": fingerprint, "src": src, "delta": None}
-        kd_cols = _DICT_LAYOUT.get(name)
-        kd_dst = os.path.join(out_dir, f"{name}.keydict.parquet")
-        cs_dst = os.path.join(out_dir, f"{name}.colstats.parquet")
-        ap_spec = _AGG_PROJECTIONS.get(name)
-        ap_dst = os.path.join(out_dir, f"{name}.aggproj.parquet")
-        tp_spec = _TOPK_PROJECTIONS.get(name)
-        tp_dst = os.path.join(
-            out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
-        ) if tp_spec else ""
         table_marker = os.path.join(dst, "_SUCCESS")
-        table_fresh = _marker_fresh(table_marker, fingerprint)
-        # colstats publish in lockstep with the keydict they derive from
-        kd_fresh = not kd_cols or (
-            _marker_fresh(os.path.join(kd_dst, "_SUCCESS"), fingerprint)
-            and _marker_fresh(os.path.join(cs_dst, "_SUCCESS"), fingerprint)
-        )
-        ap2_dst = (
-            _coarse_dst(out_dir, name, ap_spec)
-            if ap_spec and "coarse" in ap_spec
-            else ""
-        )
-        ap_fresh = not ap_spec or (
-            _marker_fresh(os.path.join(ap_dst, "_SUCCESS"), fingerprint)
-            and (
-                not ap2_dst
-                or _marker_fresh(os.path.join(ap2_dst, "_SUCCESS"), fingerprint)
-            )
-        )
-        tp_fresh = not tp_spec or _marker_fresh(
-            os.path.join(tp_dst, "_SUCCESS"), fingerprint
-        )
-        bk_col = _BUCKET_LAYOUT.get(name)
-        bk_dst = os.path.join(out_dir, f"{name}.bucketed.parquet")
-        nb = max(8, cpus)
-        bk_fp = f"{fingerprint}:bk{nb}"
-        bk_meta = {"bucket_col": bk_col, "n_buckets": nb}
-        bk_fresh = not bk_col or _marker_fresh(
-            os.path.join(bk_dst, "_SUCCESS"), bk_fp
-        )
-        if table_fresh and kd_fresh and ap_fresh and tp_fresh and bk_fresh:
-            continue
-        key, target_rows = _INGEST_LAYOUT.get(name, (None, 150_000))
-        local = src_bytes < LOCAL_INGEST_MAX_BYTES
-        if not table_fresh:
+        old_fp, old_tmeta = _read_marker(table_marker)
+        delta = None
+        if old_fp != fingerprint:
+            key, target_rows = _INGEST_LAYOUT.get(name, (None, 150_000))
+            local = src_bytes < LOCAL_INGEST_MAX_BYTES
             # Append-only delta path: a directory source that only GAINED
             # part files since the recorded manifest ingests just the new
-            # batch and MERGES the keydict projection — O(batch), not
-            # O(history). Requires table and keydict markers in lockstep
-            # (same prior fingerprint), else a merge would compound onto a
-            # dictionary from a different table state.
-            delta = _delta_files(table_marker, layout, manifest) if local else None
-            if delta is not None:
-                # schema gate: a batch that ADDS columns (or changes a
-                # type) is the evolution event — full rebuild under the
-                # unified schema; subset batches stay O(batch) (null-fill)
-                old_parts = _read_marker(table_marker)[1].get("parts") or {}
-                if old_parts and not _delta_schema_ok(
-                    src, old_parts, delta, dst
-                ):
-                    delta = None
-            if delta is not None:
-                # pre-append fingerprint: a projection merges ONLY when it
-                # was built from exactly this table state — merging onto a
-                # sibling from a different state would compound. Siblings
-                # out of lockstep (e.g. a projection type declared after
-                # the copy was built, or a crash between an earlier append
-                # and its merge) do NOT cancel the O(batch) table append;
-                # they are rebuilt from the appended managed copy instead.
-                old_table_fp, _ = _read_marker(table_marker)
-                tbl_state[name]["prev_fp"] = old_table_fp
-
-                def _lockstep(sib: str) -> bool:
-                    fp, _m = _read_marker(os.path.join(sib, "_SUCCESS"))
-                    return fp == old_table_fp
-
-                kd_merge = bool(kd_cols) and _lockstep(kd_dst) and _lockstep(cs_dst)
-                _ingest_local_append(
-                    src, dst, kd_dst, delta, key,
-                    kd_cols if kd_merge else None,
-                    target_rows, fingerprint, meta,
-                )
-                if kd_cols and not kd_merge:
-                    _build_keydict_local(dst, kd_dst, kd_cols, fingerprint, meta)
-                if ap_spec:
-                    if _lockstep(ap_dst):
-                        _build_aggproj(
-                            spark, ap_spec,
-                            [os.path.join(src, f) for f in delta],
-                            ap_dst, fingerprint, meta, merge_with=ap_dst,
-                        )
-                    else:
-                        _build_aggproj(
-                            spark, ap_spec, [dst], ap_dst, fingerprint, meta
-                        )
-                    if ap2_dst:
-                        _build_coarse_aggproj(
-                            spark, ap_spec, ap_dst, ap2_dst, fingerprint, meta
-                        )
-                if tp_spec:
-                    if _lockstep(tp_dst):
-                        _build_topkproj(
-                            spark, tp_spec,
-                            [os.path.join(src, f) for f in delta],
-                            tp_dst, fingerprint, meta, merge_with=tp_dst,
-                        )
-                    else:
-                        _build_topkproj(
-                            spark, tp_spec, [dst], tp_dst, fingerprint, meta
-                        )
-                if bk_col:
-                    # lockstep = built from exactly the pre-append table
-                    # state AND the same bucket count; else rebuild from the
-                    # (already appended) managed copy
-                    bk_have, _bm = _read_marker(os.path.join(bk_dst, "_SUCCESS"))
-                    if bk_have == f"{old_table_fp}:bk{nb}":
-                        _append_bucketed(
-                            spark,
-                            [os.path.join(src, f) for f in delta],
-                            bk_dst, bk_col, nb, bk_fp, bk_meta,
-                            hashlib.md5("|".join(delta).encode()).hexdigest()[:8],
-                        )
-                    else:
-                        _build_bucketed(
-                            spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta
-                        )
-                tbl_state[name]["delta"] = delta
-                appended += 1
-                continue
+            # batch — O(batch), not O(history); the siblings merge it.
+            new_files = (
+                _delta_files(table_marker, layout, manifest) if local else None
+            )
+            # schema gate: a batch that ADDS columns (or changes a type) is
+            # the evolution event — full rebuild under the unified schema;
+            # subset batches stay O(batch) (null-fill)
+            if new_files is not None and not _delta_schema_ok(
+                src, old_tmeta.get("parts") or {}, new_files, dst
+            ):
+                new_files = None
             # Whole-batch DELETE path: the source lost exactly some
             # previously-appended batches (nothing added/rewritten). The
             # managed copy drops the tagged part files in a new hardlinked
-            # generation; SUM-mergeable projections (keydict/colstats/
-            # aggproj) absorb the removed rows as NEGATIVE deltas —
-            # O(batch + projection), never O(history). Ordered/vector/
-            # bucketed artifacts cannot subtract (a removed top row
-            # invalidates them) and rebuild from the post-delete managed
-            # copy — the documented rebuild-on-delete half of the
-            # contract. Everything else (base-file removal, rewrites,
-            # compaction) stays a full rebuild via fingerprint miss.
+            # generation and the siblings absorb the removed rows. Anything
+            # else (base-file removal, rewrites, compaction) stays a full
+            # rebuild via fingerprint miss.
             removed = (
                 _removed_batches(table_marker, layout, manifest)
-                if local
+                if local and new_files is None
                 else None
             )
-            if removed is not None:
-                old_table_fp, old_tmeta = _read_marker(table_marker)
-                tbl_state[name]["prev_fp"] = old_table_fp
+            if new_files is not None:
+                tag = _ingest_local_append(
+                    src, dst, new_files, key, target_rows, fingerprint, meta
+                )
+                delta = _Delta(
+                    added=tuple(os.path.join(src, f) for f in new_files),
+                    tags=(tag,),
+                )
+                appended += 1
+            elif removed is not None:
                 old_batches = old_tmeta.get("batches") or {}
                 tags = sorted({old_batches[f] for f in removed})
-                meta_del = {
-                    **(meta or {}),
+                meta = {
+                    **meta,
                     "batches": {
-                        k: v
-                        for k, v in old_batches.items()
-                        if k not in removed
+                        k: v for k, v in old_batches.items() if k not in removed
                     },
                 }
-
-                def _lockstep_del(sib: str) -> bool:
-                    fp, _m = _read_marker(os.path.join(sib, "_SUCCESS"))
-                    return fp == old_table_fp
-
-                kd_merge = (
-                    bool(kd_cols)
-                    and _lockstep_del(kd_dst)
-                    and _lockstep_del(cs_dst)
-                )
-                hold = _ingest_local_delete(
-                    dst, kd_dst, tags,
-                    kd_cols if kd_merge else None,
-                    fingerprint, meta_del,
-                )
-                held_paths = sorted(
-                    os.path.join(hold, f)
-                    for f in os.listdir(hold)
-                    if f.endswith(".parquet")
-                )
-                if kd_cols and not kd_merge:
-                    _build_keydict_local(
-                        dst, kd_dst, kd_cols, fingerprint, meta_del
-                    )
-                if ap_spec:
-                    if _lockstep_del(ap_dst) and held_paths:
-                        _build_aggproj(
-                            spark, ap_spec, held_paths, ap_dst,
-                            fingerprint, meta_del,
-                            merge_with=ap_dst, negate=True,
-                        )
-                    else:
-                        _build_aggproj(
-                            spark, ap_spec, [dst], ap_dst,
-                            fingerprint, meta_del,
-                        )
-                    if ap2_dst:
-                        _build_coarse_aggproj(
-                            spark, ap_spec, ap_dst, ap2_dst,
-                            fingerprint, meta_del,
-                        )
-                if tp_spec:
-                    _build_topkproj(
-                        spark, tp_spec, [dst], tp_dst, fingerprint, meta_del
-                    )
-                if bk_col:
-                    # O(batch) when the copy is in lockstep AND every
-                    # removed batch's bucket files carry its tag (i.e. the
-                    # batch was appended after the copy existed); else
-                    # rebuild from the post-delete managed table
-                    bk_have, _bm = _read_marker(
-                        os.path.join(bk_dst, "_SUCCESS")
-                    )
-                    tagged = {
-                        f.split("-", 1)[0][1:]
-                        for f in os.listdir(bk_dst)
-                        if f.startswith("a") and f.endswith(".parquet")
-                    }
-                    if bk_have == f"{old_table_fp}:bk{nb}" and all(
-                        t in tagged for t in tags
-                    ):
-                        _delete_bucketed(bk_dst, tags, bk_fp, bk_meta)
-                    else:
-                        _build_bucketed(
-                            spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta
-                        )
-                tbl_state[name]["removed_paths"] = held_paths
+                hold = _ingest_local_delete(dst, tags, fingerprint, meta)
                 hold_dirs.append(hold)
+                delta = _Delta(
+                    removed=tuple(
+                        sorted(
+                            e.path
+                            for e in os.scandir(hold)
+                            if e.name.endswith(".parquet")
+                        )
+                    ),
+                    tags=tuple(tags),
+                )
                 deleted += 1
-                continue
-            if local:
-                # Local fast path: at landed-file sizes below a task's worth
-                # of data, a driver-side pyarrow sort+split (deterministic,
-                # no sampling job) beats a Spark repartitionByRange round by
-                # ~10×. The distributed branch below is the same layout at
-                # scale.
-                _ingest_local(
-                    src, dst, key, min_rows_to_split, cpus, parts,
-                    fingerprint, target_rows, meta,
-                )
             else:
-                df = (
-                    read_events(spark, src)
-                    if name == "events"
-                    # mergeSchema: a directory landing whose parts evolved
-                    # additively unions to one schema (old rows null-fill)
-                    # instead of silently dropping the new columns
-                    else spark.read.option("mergeSchema", "true").parquet(src)
-                )
-                # merge-tombstone replay, same contract as _read_landed's
-                # on the local branch: a full rebuild must not resurrect
-                # merge-replaced rows next to their batch versions
-                df = _replay_tombstones_spark(src, df)
-                if key:
-                    n_parts = parts or max(2, cpus // 2)
-                    df = df.repartitionByRange(n_parts, key)
-                # same atomic rename-aside publish as every local builder:
-                # an in-place mode("overwrite") would delete dst first,
-                # breaking concurrent readers and crash recovery
-                _publish_dir(
-                    dst, fingerprint, meta,
-                    lambda tmp: df.write.mode("overwrite").parquet(tmp),
-                )
-            # a full rebuild starts a new state lineage (source rewrite /
-            # layout change): pre-rebuild generations must not be restorable
-            _drop_snapshots(dst)
-            rebuilt += 1
-        if kd_cols and (not kd_fresh or not table_fresh):
-            build = _build_keydict_local if local else _build_keydict_spark
-            args = (dst, kd_dst, kd_cols, fingerprint, meta)
-            build(*args) if local else build(spark, *args)
-        if ap_spec and (not ap_fresh or not table_fresh):
-            _build_aggproj(spark, ap_spec, [dst], ap_dst, fingerprint, meta)
-            if ap2_dst:
-                _build_coarse_aggproj(
-                    spark, ap_spec, ap_dst, ap2_dst, fingerprint, meta
-                )
-        if tp_spec and (not tp_fresh or not table_fresh):
-            _build_topkproj(spark, tp_spec, [dst], tp_dst, fingerprint, meta)
-        if bk_col and (not bk_fresh or not table_fresh):
-            _build_bucketed(spark, dst, bk_dst, bk_col, nb, bk_fp, bk_meta)
-    # Materialized star rollups (see _JOIN_PROJECTIONS): rebuilt when any
-    # source changed; insert-only IVM when ONLY the fact gained files,
-    # delete-IVM when it only lost a batch / predicate-matched rows.
-    jp_ivm = _maintain_join_projections(spark, out_dir, tbl_state)
-    # rollups maintained incrementally (vs fully rebuilt) by THIS call
-    spark._lianjia_joinproj_ivm = jp_ivm
-    # Result projections (see _RESULT_PROJECTIONS): materialized relations
-    # built by the serving kernels/SQL themselves over the managed copy.
-    vp_merged = _maintain_result_projections(spark, out_dir, tbl_state)
+                if local:
+                    # Local fast path: at landed-file sizes below a task's
+                    # worth of data, a driver-side pyarrow sort+split
+                    # (deterministic, no sampling job) beats a Spark
+                    # repartitionByRange round by ~10×. The distributed
+                    # branch below is the same layout at scale.
+                    _ingest_local(
+                        src, dst, key, min_rows_to_split, cpus, parts,
+                        fingerprint, target_rows, meta,
+                    )
+                else:
+                    df = (
+                        read_events(spark, src)
+                        if name == "events"
+                        # mergeSchema: a directory landing whose parts
+                        # evolved additively unions to one schema (old rows
+                        # null-fill) instead of silently dropping the new
+                        # columns
+                        else spark.read.option("mergeSchema", "true").parquet(src)
+                    )
+                    # merge-tombstone replay, same contract as
+                    # _read_landed's on the local branch: a full rebuild
+                    # must not resurrect merge-replaced rows next to their
+                    # batch versions
+                    df = _replay_tombstones_spark(src, df)
+                    if key:
+                        n_parts = parts or max(2, cpus // 2)
+                        df = df.repartitionByRange(n_parts, key)
+                    # same atomic rename-aside publish as every local
+                    # builder: an in-place mode("overwrite") would delete
+                    # dst first, breaking concurrent readers and crash
+                    # recovery
+                    _publish_dir(
+                        dst, fingerprint, meta,
+                        lambda tmp: df.write.mode("overwrite").parquet(tmp),
+                    )
+                # a full rebuild starts a new state lineage (source rewrite
+                # / layout change): pre-rebuild generations must not be
+                # restorable
+                _drop_snapshots(dst)
+                rebuilt += 1
+        changes[name] = (old_fp, fingerprint, meta, delta)
     redirect = getattr(spark, "_lianjia_ingest_map", None) or {}
     redirect[os.path.normpath(sf_dir)] = out_dir
     spark._lianjia_ingest_map = redirect
@@ -6627,36 +5895,340 @@ def ingest_tables(
     # from a cold re-layout when comparing against a raw-file baseline.
     spark._lianjia_ingest_rebuilt = rebuilt
     # Tables served by the append-only delta path this call (new source
-    # part files ingested + keydict merged, history untouched).
+    # part files ingested, history untouched).
     spark._lianjia_ingest_appended = appended
     # Tables served by the whole-batch delete path this call (tagged part
-    # files dropped + SUM-mergeable projections negative-merged).
+    # files dropped).
     spark._lianjia_ingest_deleted = deleted
-    import shutil as _shutil
+    # every table is passed, changed or not: a sibling left stale by a
+    # crash (or declared after the copy was built) is rebuilt here
+    _maintain_siblings(spark, sf_dir, out_dir, changes)
+    import shutil
 
     for hold in hold_dirs:
-        _shutil.rmtree(hold, ignore_errors=True)
-    # Result projections maintained incrementally (vs rebuilt) by THIS call.
-    spark._lianjia_resultproj_merged = vp_merged
-    # Invalidate memoized DataFrames/views built over the raw paths.
+        shutil.rmtree(hold, ignore_errors=True)
+    return out_dir
+
+
+class _Delta(NamedTuple):
+    """What one mutation did to a managed table, as :func:`_maintain_siblings`
+    folds it into the table's sibling artifacts."""
+
+    # parquet files holding the removed rows (update: their old versions)
+    removed: tuple = ()
+    # parquet files holding the added rows (update: the new versions;
+    # append: the landed batch files)
+    added: tuple = ()
+    # columns whose values differ between the two generations; None when
+    # rows were added or removed, empty when no value changed (compaction)
+    cols: frozenset | None = None
+    # per-file rewrite of the bucketed copy for a predicate DML: the file's
+    # new content, or None when no row of it matches (see _bucket_rewrite)
+    rewrite: Callable | None = None
+    # append-batch tags the rows were added under / are removed with
+    tags: tuple = ()
+    # signed (col, key, cnt) keydict deltas counted by distributed split
+    # tasks; None: count them from the removed/added files
+    kd_counts: list | None = None
+
+
+def _touches(delta: _Delta, text: str | None) -> bool:
+    """Whether ``delta`` can change an artifact whose definition reads the
+    columns named in ``text`` (None: every column, like the bucketed copy).
+    Rows added or removed touch every artifact; a value change touches only
+    the artifacts that mention a changed column."""
+    if delta.cols is None:
+        return True
+    if text is None:
+        return bool(delta.cols)
+    cols = set(delta.cols)
+    if "ts" in cols:
+        # the events specs read the DERIVED ts_ns; the managed column
+        # backing it is ts (nanos-as-long form) or ts_ns
+        cols.add("ts_ns")
+    return bool(_referenced_cols(text, cols))
+
+
+def _sibling_step(
+    arts: list[str], old_fp: str, new_fp: str, delta: _Delta | None,
+    text: str | None, suffix: str = "",
+) -> str:
+    """The maintenance step for sibling artifacts ``arts`` (published
+    together) of a table going from ``old_fp`` to ``new_fp``: "keep" (all
+    fresh), "restamp" (values provably unchanged), "merge" (fold the delta
+    in) or "rebuild". Merges and restamps require every artifact to be in
+    lockstep with ``old_fp`` — a merge onto a sibling from another table
+    state would compound; a full rebuild (``delta`` None) rebuilds when
+    the table itself was rebuilt or any artifact is stale."""
+    fps = [_read_marker(os.path.join(a, "_SUCCESS"))[0] for a in arts]
+    if delta is None:
+        fresh = old_fp == new_fp and all(fp == new_fp + suffix for fp in fps)
+        return "keep" if fresh else "rebuild"
+    if any(fp != old_fp + suffix for fp in fps):
+        return "rebuild"
+    return "merge" if _touches(delta, text) else "restamp"
+
+
+def _bucket_count() -> int:
+    """Bucket count of the bucketed fact copies: one per core, at least 8."""
+    return max(8, int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)))
+
+
+def _bucket_rewrite(predicate, assignments=None):
+    """Per-file rewrite of the bucketed copy for ``DELETE``/``UPDATE ...
+    WHERE predicate``: the file minus its matched rows, plus their updated
+    versions for an update — through _apply_update, so shredded columns
+    re-derive exactly like the main table's rewrite — or None when the file
+    holds no match. Updated rows stay in their bucket: the maintainer
+    rebuilds instead when the update changes the bucket key."""
+
+    def rewrite(path: str):
+        import pyarrow as pa
+
+        matched, rest = _split_file_by_predicate(path, predicate)
+        if matched is None or assignments is None:
+            return rest
+        return pa.concat_tables([rest, _apply_update(matched, assignments)])
+
+    return rewrite
+
+
+def _maintain_siblings(
+    spark: SparkSession, sf_dir: str, out_dir: str, changes: dict[str, tuple]
+) -> None:
+    """Bring every sibling artifact in step with the tables a mutation just
+    published, then settle the catalog: star rollups, result projections,
+    memoized views, pins. The one maintainer behind ingest (full, append
+    and whole-batch delete), delete_where, update_where, merge_into and
+    compact_table.
+
+    ``changes`` maps each table the call published (or re-checked) to
+    ``(old_fp, new_fp, meta, delta)``: its marker fingerprint before and
+    after, the marker meta rebuilt or merged artifacts carry, and a
+    :class:`_Delta` — or None for a full rebuild, which rebuilds every
+    sibling that is stale or whose table was rebuilt. Siblings publish
+    AFTER their table, so a crash in between leaves them one fingerprint
+    behind: refused by the lockstep check, rebuilt by the next ingest.
+
+    Per artifact kind and delta (lockstep = built from exactly the
+    pre-mutation table state; a sibling out of lockstep rebuilds; "reads"
+    = the update changed a column the artifact's definition names):
+
+    ===================  ===============  ==================  ==========================  =======
+    artifact             append           delete              update                      compact
+    ===================  ===============  ==================  ==========================  =======
+    keydict/colstats     + merge          − merge             − and + merge in one        restamp
+                                                              publish; restamp unless
+                                                              it reads
+    aggproj / coarse     + merge, coarse  − merge, coarse     − merge (under ``:neg``)    restamp
+                         re-derived       re-derived          then + merge; restamp
+                                                              unless it reads
+    top-k                merge the batch  restamp if every    restamp unless it reads or  restamp
+                                          removed row sorts   a row version reaches the
+                                          after the boundary, boundary, else rebuild
+                                          else rebuild
+    bucketed copy        tagged append    batch: drop tagged  per-file rewrite; rebuild   restamp
+                                          files; predicate:   when the bucket key
+                                          per-file rewrite    changes
+    star rollups         insert IVM       delete IVM          − then + IVM; restamp       restamp
+                         (fact only)      (fact only)         unless it reads
+    result projections   append merger    delete merger       restamp unless it reads     restamp
+                                                              (declared columns), else
+                                                              update merge
+    ===================  ===============  ==================  ==========================  =======
+
+    Every shortcut is exact: integer partial sums subtract as exactly as
+    they add, a restamped artifact provably holds the same values, and an
+    artifact without a merge rule for the delta (no declared merger, a
+    non-fact star source gaining or losing rows) rebuilds."""
+    import pyarrow.parquet as pq
+
+    nb = _bucket_count()
+    for name, (old_fp, new_fp, meta, delta) in changes.items():
+        dst = os.path.join(out_dir, f"{name}.parquet")
+        kd_cols = _DICT_LAYOUT.get(name)
+        if kd_cols:
+            kd = os.path.join(out_dir, f"{name}.keydict.parquet")
+            cs = os.path.join(out_dir, f"{name}.colstats.parquet")
+            step = _sibling_step(
+                [kd, cs], old_fp, new_fp, delta, " ".join(kd_cols)
+            )
+            if step == "restamp":
+                _restamp_marker(kd, old_fp, new_fp)
+                _restamp_marker(cs, old_fp, new_fp)
+            elif step == "merge":
+                _keydict_merge(
+                    kd, delta.removed, delta.added, kd_cols, new_fp, meta,
+                    precomputed=delta.kd_counts,
+                )
+            elif step == "rebuild":
+                paths = [
+                    e.path for e in os.scandir(dst) if e.name.endswith(".parquet")
+                ]
+                if sum(os.path.getsize(p) for p in paths) < LOCAL_INGEST_MAX_BYTES:
+                    _build_keydict_local(dst, kd, kd_cols, new_fp, meta)
+                else:
+                    _build_keydict_spark(spark, dst, kd, kd_cols, new_fp, meta)
+
+        ap_spec = _AGG_PROJECTIONS.get(name)
+        if ap_spec:
+            ap = os.path.join(out_dir, f"{name}.aggproj.parquet")
+            arts = [ap]
+            if "coarse" in ap_spec:
+                arts.append(_coarse_dst(out_dir, name, ap_spec))
+            text = " ".join(
+                [
+                    *ap_spec["keys"],
+                    *ap_spec.get("key_exprs", {}).values(),
+                    *ap_spec["measures"].values(),
+                ]
+            )
+            step = _sibling_step(arts, old_fp, new_fp, delta, text)
+            if step == "restamp":
+                for a in arts:
+                    _restamp_marker(a, old_fp, new_fp)
+            elif step != "keep":
+                if step == "merge" and (delta.removed or delta.added):
+                    # an update publishes its negative merge under a
+                    # fingerprint no reader accepts: a crash before the
+                    # positive merge is refused by lockstep, never served
+                    # half-merged
+                    if delta.removed:
+                        _build_aggproj(
+                            spark, ap_spec, list(delta.removed), ap,
+                            f"{new_fp}:neg" if delta.added else new_fp, meta,
+                            merge_with=ap, negate=True,
+                        )
+                    if delta.added:
+                        _build_aggproj(
+                            spark, ap_spec, list(delta.added), ap, new_fp,
+                            meta, merge_with=ap,
+                        )
+                else:
+                    _build_aggproj(spark, ap_spec, [dst], ap, new_fp, meta)
+                if len(arts) > 1:
+                    _build_coarse_aggproj(
+                        spark, ap_spec, ap, arts[1], new_fp, meta
+                    )
+
+        tp_spec = _TOPK_PROJECTIONS.get(name)
+        if tp_spec:
+            tp = os.path.join(
+                out_dir, f"{name}.{tp_spec['name']}.topkproj.parquet"
+            )
+            step = _sibling_step(
+                [tp], old_fp, new_fp, delta,
+                " ".join([*tp_spec["cols"], tp_spec["order_sql"]]),
+            )
+            if step == "merge" and (delta.removed or not delta.added):
+                # a removed top row needs a replacement no merge can
+                # produce — unless every removed (and re-added) row
+                # provably sorts after the boundary of a full projection
+                step = (
+                    "restamp"
+                    if _topk_unaffected(
+                        tp, tp_spec, [*delta.removed, *delta.added]
+                    )
+                    else "rebuild"
+                )
+            if step == "restamp":
+                _restamp_marker(tp, old_fp, new_fp)
+            elif step == "merge":
+                _build_topkproj(
+                    spark, tp_spec, list(delta.added), tp, new_fp, meta,
+                    merge_with=tp,
+                )
+            elif step == "rebuild":
+                _build_topkproj(spark, tp_spec, [dst], tp, new_fp, meta)
+
+        bk_col = _BUCKET_LAYOUT.get(name)
+        if bk_col:
+            bk = os.path.join(out_dir, f"{name}.bucketed.parquet")
+            sfx = f":bk{nb}"
+            bk_meta = {"bucket_col": bk_col, "n_buckets": nb}
+            step = _sibling_step([bk], old_fp, new_fp, delta, None, sfx)
+            if step == "restamp":
+                _restamp_marker(bk, old_fp + sfx, new_fp + sfx)
+            elif (
+                step == "merge"
+                and delta.rewrite
+                and bk_col not in (delta.cols or ())
+            ):
+                # targeted rewrite: only bucket files with matches rewrite,
+                # names preserved (bucket ids ride the _NNNNN suffix, append
+                # tags the a<tag>- prefix); the rest hardlink
+                def _write_buckets(tmp: str, rewrite=delta.rewrite) -> None:
+                    from concurrent.futures import ThreadPoolExecutor
+
+                    entries = [
+                        e
+                        for e in os.scandir(bk)
+                        if e.is_file() and e.name.endswith(".parquet")
+                    ]
+
+                    def _one(entry) -> None:
+                        new = rewrite(entry.path)
+                        if new is None:
+                            os.link(entry.path, os.path.join(tmp, entry.name))
+                        else:
+                            pq.write_table(new, os.path.join(tmp, entry.name))
+
+                    with ThreadPoolExecutor(
+                        max_workers=min(8, max(1, len(entries)))
+                    ) as pool:
+                        list(pool.map(_one, entries))
+
+                _publish_dir(bk, new_fp + sfx, bk_meta, _write_buckets)
+            elif step == "merge" and delta.tags and delta.added:
+                _append_bucketed(
+                    spark, list(delta.added), bk, bk_col, nb, new_fp + sfx,
+                    bk_meta, delta.tags[0],
+                )
+            elif step == "merge" and delta.tags and set(delta.tags) <= {
+                # a removed batch drops in O(batch) only when it was
+                # appended after the copy existed (its files carry the tag)
+                f.split("-", 1)[0][1:]
+                for f in os.listdir(bk)
+                if f.startswith("a") and f.endswith(".parquet")
+            }:
+                _delete_bucketed(bk, list(delta.tags), new_fp + sfx, bk_meta)
+            elif step != "keep":
+                _build_bucketed(
+                    spark, dst, bk, bk_col, nb, new_fp + sfx, bk_meta
+                )
+
+    tbl_state: dict[str, dict] = {}
+    for t in TABLES:
+        fp, _m = _read_marker(os.path.join(out_dir, f"{t}.parquet", "_SUCCESS"))
+        if fp:
+            tbl_state[t] = {"fp": fp}
+    for t, (old_fp, new_fp, _meta, delta) in changes.items():
+        tbl_state[t] = {"fp": new_fp, "prev_fp": old_fp, "delta": delta}
+    # rollups / result projections maintained incrementally (merged or
+    # restamped, vs rebuilt) by this call
+    spark._lianjia_joinproj_ivm = _maintain_join_projections(
+        spark, out_dir, tbl_state
+    )
+    spark._lianjia_resultproj_merged = _maintain_result_projections(
+        spark, out_dir, tbl_state
+    )
+    # memoized DataFrames/views cover the previous generations
     spark._lianjia_table_cache = {}
     spark._lianjia_views_dir = None
     spark._lianjia_keydict_views = {}
-    # Pinned artifacts (queries / rollup cuts) refresh last, over the
-    # settled catalog — re-entrancy-guarded, no-op with no pins.
+    # pinned artifacts (queries / rollup cuts) are siblings too: they
+    # refresh last, over the settled catalog — re-entrancy-guarded, no-op
+    # with no pins
     _refresh_pins(spark, out_dir, sf_dir)
-    return out_dir
 
 
 def _maintain_join_projections(
     spark: SparkSession, out_dir: str, tbl_state: dict[str, dict]
 ) -> int:
-    """(Re)build or IVM-merge every declared star rollup whose sources are
-    all present in ``tbl_state`` ({table: {"fp", "src", "delta",
-    "prev_fp"?, "removed_paths"?}}). Returns how many rollups were
-    maintained incrementally (insert- or delete-IVM) rather than rebuilt.
-    Shared by ingest_tables (append/delete delta paths) and delete_where
-    (predicate deletes feed the removed rows as ``removed_paths``)."""
+    """(Re)build, IVM-merge or restamp every declared star rollup whose
+    sources are all present in ``tbl_state`` ({table: {"fp", "prev_fp"?,
+    "delta"?}} — see :func:`_maintain_siblings`). Returns how many rollups
+    were maintained incrementally rather than rebuilt."""
     jp_ivm = 0
     for jp_name, spec in _JOIN_PROJECTIONS.items():
         if any(t not in tbl_state for t in spec["sources"]):
@@ -6676,83 +6248,57 @@ def _maintain_join_projections(
             )
             continue
         fact = spec["fact"]
-        fact_delta = tbl_state[fact]["delta"]
-        fact_removed = tbl_state[fact].get("removed_paths")
-        fact_upd_old = tbl_state[fact].get("updated_old_paths")
-        fact_upd_new = tbl_state[fact].get("updated_new_paths")
-        _old_fp, old_meta = _read_marker(jp_marker)
+        pre_fp, old_meta = _read_marker(jp_marker)
         oldc = old_meta.get("components") or {}
-        # IVM only when the existing rollup was built from EXACTLY the
-        # pre-append/-delete fact state (a crash between a previous
-        # append and its rollup merge would otherwise lose the missed
-        # batch forever) and every non-fact source is unchanged.
-        lockstep = bool(
-            oldc.get(fact)
-            and oldc.get(fact) == tbl_state[fact].get("prev_fp")
-            and all(oldc.get(t) == comp[t] for t in spec["sources"] if t != fact)
+        # sources whose generation moved since the rollup was built; an
+        # incremental step needs each of them to have moved from EXACTLY
+        # the state the rollup was built from (a crash between an earlier
+        # mutation and its rollup merge would otherwise lose that delta)
+        moved = [t for t in spec["sources"] if oldc.get(t) != comp[t]]
+        lockstep = bool(moved) and all(
+            oldc.get(t) and oldc.get(t) == tbl_state[t].get("prev_fp")
+            for t in moved
         )
+        deltas = [tbl_state[t].get("delta") for t in moved]
+        if lockstep and all(
+            d is not None and not _touches(d, spec["build_sql"]) for d in deltas
+        ):
+            # relevance restamp: no moved source changed a column this
+            # rollup reads (compaction, an update of unread columns) —
+            # provably unchanged, re-fingerprint only
+            _restamp_marker(jp_dst, pre_fp, jp_fp, components=comp)
+            # content unchanged -> the coarse derivation restamps too
+            _maintain_coarse_joinproj(
+                spark, out_dir, jp_name, spec, jp_dst, jp_fp, jp_meta,
+                restamp_from=pre_fp,
+            )
+            jp_ivm += 1
+            continue
         src_paths = {
             t: os.path.join(out_dir, f"{t}.parquet") for t in spec["sources"]
         }
-        if fact_delta and lockstep:
-            # the delta joins the RAW new fact files (values identical to
-            # the managed layout) against the unchanged managed sources
-            src_paths[fact] = [
-                os.path.join(tbl_state[fact]["src"], f) for f in fact_delta
-            ]
-            _build_joinproj(
-                spark, spec, src_paths, jp_dst, jp_fp, jp_meta,
-                merge_with=jp_dst,
-            )
-            jp_ivm += 1
-        elif fact_removed and lockstep:
-            # delete-IVM: the REMOVED batch (held managed part files)
-            # joins the unchanged sources with negated measures
-            src_paths[fact] = fact_removed
-            _build_joinproj(
-                spark, spec, src_paths, jp_dst, jp_fp, jp_meta,
-                merge_with=jp_dst, negate=True,
-            )
-            jp_ivm += 1
-        elif fact_upd_old and fact_upd_new and lockstep:
-            import pyarrow.parquet as _pq
-
-            upd_cols = tbl_state[fact].get("updated_cols") or set()
-            fact_cols = set(_pq.read_schema(fact_upd_old[0]).names)
-            if upd_cols and upd_cols.isdisjoint(
-                _referenced_cols(spec["build_sql"], fact_cols)
-            ):
-                # relevance restamp: the update never touched a column
-                # this rollup reads — provably unchanged, re-fingerprint
-                # only (saves two merge jobs per point update)
-                pre_fp = _read_marker(jp_marker)[0]
-                tmpm = jp_marker + f".tmp-{os.getpid()}"
-                _write_marker(tmpm, jp_fp, jp_meta)
-                os.replace(tmpm, jp_marker)
-                # content unchanged -> the coarse derivation restamps too
-                _maintain_coarse_joinproj(
-                    spark, out_dir, jp_name, spec, jp_dst, jp_fp, jp_meta,
-                    restamp_from=pre_fp,
+        d = deltas[0] if moved == [fact] else None
+        if lockstep and d is not None and (d.removed or d.added):
+            # IVM: the fact's removed rows (old versions) join the
+            # unchanged sources with negated measures, its added rows (new
+            # versions; raw landed files on append) join positively —
+            # exact even when an update moves rows across group or join
+            # keys. An update's negative merge publishes under a
+            # fingerprint no reader accepts (":neg"), so a crash between
+            # the merges is refused by lockstep and rebuilt.
+            if d.removed:
+                src_paths[fact] = list(d.removed)
+                _build_joinproj(
+                    spark, spec, src_paths, jp_dst,
+                    f"{jp_fp}:neg" if d.added else jp_fp, jp_meta,
+                    merge_with=jp_dst, negate=True,
                 )
-                jp_ivm += 1
-                continue
-            # update-IVM: negative merge of the old row versions, then
-            # positive merge of the new ones — exact even when the update
-            # moves rows across group keys or join keys (each fact row's
-            # contribution is independently subtractable/re-addable). The
-            # intermediate publish carries a fingerprint no reader accepts
-            # (":neg"), so a crash between the merges is refused by
-            # lockstep and rebuilt on the next ingest.
-            src_paths[fact] = fact_upd_old
-            _build_joinproj(
-                spark, spec, src_paths, jp_dst, f"{jp_fp}:neg", jp_meta,
-                merge_with=jp_dst, negate=True,
-            )
-            src_paths[fact] = fact_upd_new
-            _build_joinproj(
-                spark, spec, src_paths, jp_dst, jp_fp, jp_meta,
-                merge_with=jp_dst,
-            )
+            if d.added:
+                src_paths[fact] = list(d.added)
+                _build_joinproj(
+                    spark, spec, src_paths, jp_dst, jp_fp, jp_meta,
+                    merge_with=jp_dst,
+                )
             jp_ivm += 1
         else:
             _build_joinproj(spark, spec, src_paths, jp_dst, jp_fp, jp_meta)
@@ -6826,7 +6372,12 @@ def _maintain_result_projections(
     table, so it is exact for removals too) merge with the REMOVED rows as
     the delta; everything else (the vector pair/k-NN artifacts, whose
     append mergers only score new rows) rebuilds — a deleted top pair
-    needs a replacement no merge can produce."""
+    needs a replacement no merge can produce.
+
+    A compaction restamps, and so does an update that assigned none of
+    the columns the artifact declares it reads (PROJECTION_RELEVANT_COLS);
+    other updates merge (old versions, new versions) through mergers that
+    handle both, else rebuild."""
     vp_merged = 0
     for _vp_name, vp_spec in _RESULT_PROJECTIONS.items():
         t = vp_spec["table"]
@@ -6842,23 +6393,37 @@ def _maintain_result_projections(
         mod = importlib.import_module(vp_spec["module"])
         builders = mod.PROJECTION_BUILDERS
         merge_fn = getattr(mod, "PROJECTION_MERGERS", {}).get(vp_spec["builder"])
-        managed = os.path.join(out_dir, f"{t}.parquet")
-        src_df = (
-            read_events(spark, managed)
-            if vp_spec.get("reader") == "events"
-            else spark.read.parquet(managed)
-        )
-        delta = tbl_state[t].get("delta")
-        removed = tbl_state[t].get("removed_paths")
-        upd_old = tbl_state[t].get("updated_old_paths")
-        upd_new = tbl_state[t].get("updated_new_paths")
+        d = tbl_state[t].get("delta")
         del_merge_fn = getattr(mod, "PROJECTION_DELETE_MERGERS", {}).get(
             vp_spec["builder"]
         )
         prev_fp = tbl_state[t].get("prev_fp")
         old_fp, old_meta = _read_marker(os.path.join(vp_dst, "_SUCCESS"))
         bucket_col = vp_spec.get("bucket_col")
-        lockstep = bool(prev_fp) and old_fp == prev_fp + ":" + vp_ver
+        lockstep = d is not None and old_fp == f"{prev_fp}:{vp_ver}"
+        rel = getattr(mod, "PROJECTION_RELEVANT_COLS", {}).get(
+            vp_spec["builder"]
+        )
+        if lockstep and d.cols is not None and (
+            not d.cols or (rel and d.cols.isdisjoint(rel))
+        ):
+            # relevance restamp: no value changed (compaction) or the
+            # update assigned none of the columns this artifact's SQL reads
+            # — provably unchanged, so only the marker re-fingerprints
+            # (declared sets pinned against the SQL constants by the update
+            # test suite); components carry the POST-mutation table
+            # fingerprint or the serving check would refuse the artifact
+            _restamp_marker(
+                vp_dst, old_fp, vp_fp, components={t: tbl_state[t]["fp"]}
+            )
+            vp_merged += 1
+            continue
+        managed = os.path.join(out_dir, f"{t}.parquet")
+        src_df = (
+            read_events(spark, managed)
+            if vp_spec.get("reader") == "events"
+            else spark.read.parquet(managed)
+        )
 
         def _read_delta(paths):
             from functools import reduce
@@ -6875,13 +6440,12 @@ def _maintain_result_projections(
         def _old_for_merge(bucket_paths):
             """Old-artifact frame for a merge, restricted to the AFFECTED
             bucket files when the artifact is bucketed and the affected
-            set is computable driver-side (VERDICT r11 item 5): the
-            merger's kept-side anti-join then scans k bucket files
-            instead of the whole artifact, its output is exactly the new
-            content of the affected buckets, and the write stage skips
-            its own Spark ``collect`` of the affected set. Returns
-            (old_df, affected | None); None ⇒ unrestricted (full scan +
-            Spark-side affected collect, the pre-r12 path)."""
+            set is computable driver-side: the merger's kept-side anti-join
+            then scans k bucket files instead of the whole artifact, its
+            output is exactly the new content of the affected buckets, and
+            the write stage skips its own Spark ``collect`` of the affected
+            set. Returns (old_df, affected | None); None ⇒ unrestricted
+            (full scan + Spark-side affected collect)."""
             nbk_old = old_meta.get("n_buckets")
             if bucket_col is None or not nbk_old:
                 return spark.read.parquet(vp_dst), None
@@ -6896,15 +6460,15 @@ def _maintain_result_projections(
         merged_delta = None
         delta_paths = None
         restricted = None
-        if delta and merge_fn and lockstep:
+        if lockstep and d.added and not d.removed and merge_fn:
             # append merge: the delta is the RAW new source files
-            delta_paths = [os.path.join(tbl_state[t]["src"], f) for f in delta]
+            delta_paths = list(d.added)
             merge = merge_fn
-        elif removed and del_merge_fn and lockstep:
+        elif lockstep and d.removed and not d.added and del_merge_fn:
             # delete merge: the delta is the REMOVED rows (held managed
             # part files) — only mergers that re-derive affected state
             # from the post-delete table qualify (see docstring)
-            delta_paths = removed
+            delta_paths = list(d.removed)
             merge = del_merge_fn
         if delta_paths is not None:
             delta_df = _read_delta(delta_paths)
@@ -6915,32 +6479,7 @@ def _maintain_result_projections(
             )
             merged_delta = delta_df
             vp_merged += 1
-        elif (
-            upd_old
-            and upd_new
-            and lockstep
-            and (rel := getattr(mod, "PROJECTION_RELEVANT_COLS", {}).get(
-                vp_spec["builder"]
-            ))
-            and (ucols := tbl_state[t].get("updated_cols"))
-            and set(ucols).isdisjoint(rel)
-        ):
-            # relevance restamp: the update assigned none of the columns
-            # this artifact's SQL reads — provably unchanged, so only the
-            # marker re-fingerprints (declared sets pinned against the
-            # SQL constants by the update test suite); components carry
-            # the POST-update table fingerprint or the serving check
-            # would refuse the artifact
-            vmarker = os.path.join(vp_dst, "_SUCCESS")
-            tmpm = vmarker + f".tmp-{os.getpid()}"
-            _write_marker(
-                tmpm, vp_fp,
-                {**old_meta, "components": {t: tbl_state[t]["fp"]}},
-            )
-            os.replace(tmpm, vmarker)
-            vp_merged += 1
-            continue
-        elif upd_old and upd_new and merge_fn and del_merge_fn and lockstep:
+        elif lockstep and d.removed and d.added and merge_fn and del_merge_fn:
             # update merge: the delta is the (old versions, new versions)
             # pair. A state-rederiving merger (append- and delete-merge
             # are the SAME function: sessions, leaderboard — it re-derives
@@ -6949,10 +6488,10 @@ def _maintain_result_projections(
             # argument as for deletes. Row-local artifacts with distinct
             # mergers (regex match view) compose: delete-merge evicts the
             # old versions' keys, append-merge filters the new versions in.
-            old_rows = _read_delta(upd_old)
-            new_rows = _read_delta(upd_new)
+            old_rows = _read_delta(list(d.removed))
+            new_rows = _read_delta(list(d.added))
             union_df = old_rows.unionByName(new_rows)
-            old_art, restricted = _old_for_merge(upd_old + upd_new)
+            old_art, restricted = _old_for_merge([*d.removed, *d.added])
             if merge_fn is del_merge_fn:
                 built = merge_fn(
                     spark, src_df, old_art, union_df, f"vpbuild|{vp_fp}"
@@ -7310,11 +6849,12 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     """
     if getattr(spark, "_lianjia_pkg_shipped", False):
         return
+    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
-        "/tmp", f"data_etl_sh_lianjia_spark-{os.getpid()}.zip"
+        tempfile.gettempdir(), f"data_etl_sh_lianjia_spark-{os.getpid()}.zip"
     )
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w") as zf:
@@ -7510,9 +7050,9 @@ def _register_flattened_dims(
 def read_events(spark: SparkSession, path: str) -> DataFrame:
     """Read the ``events`` table, tolerating parquet TIMESTAMP(NANOS).
 
-    The driver testdata stores ``ts`` with nanosecond precision, which Spark's
-    parquet reader rejects unless ``spark.sql.legacy.parquet.nanosAsLong`` is
-    set. We read nanos as BIGINT (kept as ``ts_ns`` — the deterministic
+    The driver testdata stores ``ts`` as TIMESTAMP(MICROS); a landing with
+    nanosecond precision is rejected by Spark's parquet reader unless
+    ``spark.sql.legacy.parquet.nanosAsLong`` is set. We read nanos as BIGINT (kept as ``ts_ns`` — the deterministic
     event-time column used by oracle-hashed queries; DuckDB equivalent:
     ``epoch_us(ts) * 1000``) and derive ``ts`` as TIMESTAMP_NTZ truncated to
     microseconds, built timezone-independently from the epoch value so results

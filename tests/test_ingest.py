@@ -741,10 +741,16 @@ def test_projection_view_requires_fingerprint_lockstep(
     assert sess.aggproj_view(spark, str(sf), "lineitem") is not None
 
 
-def test_tune_for_sf_caller_cap_survives_dir_switches(spark):
+def test_tune_for_sf_caller_cap_survives_dir_switches(spark, monkeypatch):
     """The 'cap, never raise a CALLER's setting' contract must hold across
     REPEATED dir switches: the caller's value is captured once, not
-    re-inferred from the live conf (which this function itself wrote)."""
+    re-inferred from the live conf (which this function itself wrote).
+
+    The core count is pinned to 64 so the sf1 value (max(8, min(320, 64))
+    = 64) differs from the sf0.001 one (8) on any host: with the real
+    count on a <=8-core host both are 8, and a ratchet bug would look the
+    same as correct behaviour."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
     saved_conf = spark.conf.get("spark.sql.shuffle.partitions")
     saved = {
         a: getattr(spark, a, None)
@@ -772,7 +778,7 @@ def test_tune_for_sf_caller_cap_survives_dir_switches(spark):
         sess.tune_for_sf(spark, "/x/sf0.001")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
         sess.tune_for_sf(spark, "/x/sf1")
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 8, (
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "64", (
             "self-set small-sf value ratcheted a larger sf down"
         )
     finally:
@@ -783,6 +789,24 @@ def test_tune_for_sf_caller_cap_survives_dir_switches(spark):
                     delattr(spark, a)
             else:
                 setattr(spark, a, v)
+
+def test_package_zip_lands_in_the_temp_dir(tmp_path, monkeypatch):
+    """ensure_package_shipped writes its zip under the process temp dir
+    (TMPDIR / tempfile.tempdir), never a hard-coded /tmp."""
+    import tempfile
+    import types
+
+    shipped = []
+    fake = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(addPyFile=shipped.append)
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sess.ensure_package_shipped(fake)
+    want = tmp_path / f"data_etl_sh_lianjia_spark-{os.getpid()}.zip"
+    assert shipped == [str(want)]
+    assert want.is_file()
+    assert fake._lianjia_pkg_shipped
+
 
 def test_vector_projections_serve_and_match(
     spark, tmp_path, monkeypatch, restore_catalog

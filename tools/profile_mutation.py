@@ -31,7 +31,7 @@ def wrap(mod, name):
 for n in [
     "ingest_tables", "_build_bucketed", "_bucketed_write",
     "_bucketed_write_df_local", "_build_aggproj", "_build_coarse_aggproj",
-    "_build_keydict_local", "_keydict_negative_merge", "_build_topkproj",
+    "_build_keydict_local", "_keydict_merge", "_build_topkproj",
     "_maintain_join_projections", "_maintain_result_projections",
     "_refresh_pins", "_split_file_by_predicate", "_publish_dir",
     "_snapshot_generation", "_point_prune_candidates",
